@@ -14,18 +14,25 @@ no multi-table transaction, so the engine makes the data write
 idempotent (dynamic partition overwrite of the job's partition) and
 commits accounting through a PER-JOB COMMIT MANIFEST: after the data
 write, the accounting row is staged as a manifest file whose atomic
-rename is THE commit point; the manifest is then applied to the
-``etl_jobs`` table and cleared. Every crash window resolves to a
-consistent state:
+rename is THE commit point. The manifests of a whole O2 pass are then
+applied to the ``etl_jobs`` table in ONE keyed upsert at the end of the
+pass (in a ``finally``, so a failing sheet does not strand the commits
+before it) and cleared. Every crash window resolves to a consistent
+state:
 
 - crash before the manifest rename → accounting is fully-old; the next
   run re-selects the job and idempotently rewrites the same partition;
-- crash after the rename but before the accounting apply → the next
-  engine startup (``set_up_accounting`` / ``load_updated_spreadsheets``)
-  replays pending manifests, landing accounting fully-new without
-  re-reading the sheet;
+- crash after the rename but before the pass-end apply → the next
+  engine startup (``set_up_accounting`` / ``load_updated_spreadsheets``
+  / ``load_sheet``) replays pending manifests, landing accounting
+  fully-new without re-reading the sheet;
 - the apply itself is an idempotent keyed upsert, so replaying an
   already-applied manifest is a no-op.
+
+Within a pass the accounting the loads need (spreadsheet rows, existing
+job rows, the max job id) comes from ONE driver-side lookup sized by the
+selected jobs; each staged manifest overlays it, so a later sheet of the
+same pass sees the earlier commits and new ids stay 1..n in load order.
 
 Accounting consumers (change filter J2/J3, hash short-circuit U3)
 therefore observe either the fully-old or the fully-new transaction,
@@ -37,9 +44,11 @@ move to a rename-capable layer together.)
 
 from __future__ import annotations
 
+import json
 import os
 import time
-from dataclasses import dataclass
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -110,6 +119,38 @@ class LoadResult:
     etl_job_id: int
 
 
+@dataclass
+class _PassLookup:
+    """The accounting one O2 pass reads, held on the driver (J1):
+    spreadsheet rows by Google id, job rows by (spreadsheet id, sheet)
+    and the max job id. ``stage`` overlays each commit manifest of the
+    pass, so the lookup stays what ``etl_jobs`` will hold once the
+    pass's manifests are applied."""
+
+    # gid → (spreadsheet id, google_modified)
+    metas: dict[str, tuple[int, str]]
+    # (spreadsheet id, sheet) → (job id, content hash)
+    jobs: dict[tuple[int, str], tuple[int, str]] = field(default_factory=dict)
+    max_id: int = 0
+
+    def stage(self, job_id: int, spreadsheet_id: int, sheet_name: str,
+              content_hash: str) -> None:
+        self.jobs[(spreadsheet_id, sheet_name)] = (job_id, content_hash)
+        self.max_id = max(self.max_id, job_id)
+
+
+def _raw_header(raw_rows: list[list], header_row_idx: int) -> list[str | None]:
+    """T2's header taken from the rows the driver already holds instead
+    of a Spark ``collect``: the same cells ``rows_ops.header_row`` reads
+    after ``rows_ops.trim_cells`` (Spark's ``trim`` strips ASCII space
+    only, hence ``strip(" ")``), and the same error past the last row."""
+    if not 0 <= header_row_idx < len(raw_rows):
+        raise rows_ops.RequiredColumnNotFound(
+            f"Header row not found: {header_row_idx}")
+    return [None if c is None else str(c).strip(" ")
+            for c in raw_rows[header_row_idx]]
+
+
 class SheetsEtlEngine:
     """The engine: one warehouse directory + one pluggable source.
 
@@ -140,6 +181,7 @@ class SheetsEtlEngine:
             spark, self.table_path(self.ETL_JOBS_TABLE), ETL_JOBS_SCHEMA)
         self.profiles = StateTable(
             spark, self.table_path(self.PROFILES_TABLE), _profiles_schema())
+        self._pass: _PassLookup | None = None  # set while an O2 pass runs
 
     # -- U8: identifier qualification ---------------------------------------
 
@@ -181,11 +223,10 @@ class SheetsEtlEngine:
                     google_modified: str, content_hash: str) -> None:
         """The load transaction's single commit point: stage the
         accounting row as a manifest file and atomically rename it into
-        place, THEN apply it to ``etl_jobs``. The rename is what makes
-        the transaction durable — everything before it is invisible to
+        place, then overlay it on the pass's lookup; the pass applies
+        it to ``etl_jobs`` when it ends. The rename is what makes the
+        transaction durable — everything before it is invisible to
         accounting consumers; everything after it is replayable."""
-        import json
-
         os.makedirs(self._commits_dir(), exist_ok=True)
         row = {
             "id": job_id,
@@ -203,14 +244,13 @@ class SheetsEtlEngine:
         with open(tmp, "w") as fh:
             json.dump(row, fh)
         os.replace(tmp, final)  # atomic on POSIX — the commit point
-        self._apply_pending_commits()
+        self._pass.stage(job_id, spreadsheet_id, job.sheet_name, content_hash)
 
     def _apply_pending_commits(self) -> None:
-        """Fold every committed manifest into ``etl_jobs`` and clear it.
-        Apply-then-delete: a crash between the two replays the same
-        manifest next time, which the keyed upsert absorbs."""
-        import json
-
+        """Fold every committed manifest into ``etl_jobs`` with one
+        upsert and clear them. Apply-then-delete: a crash between the
+        two replays the same manifests next time, which the keyed
+        upsert absorbs."""
         d = self._commits_dir()
         if not os.path.isdir(d):
             return
@@ -228,6 +268,50 @@ class SheetsEtlEngine:
         self.etl_jobs.upsert(updates, keys=["spreadsheet_id", "sheet_name"])
         for n in names:
             os.remove(os.path.join(d, n))
+
+    def _lookup(self, jobs: list[EtlJob]) -> _PassLookup:
+        """J1 for a whole pass in one collect: the spreadsheet row and
+        the existing job row of every (spreadsheet, sheet) in ``jobs``,
+        each result row carrying the max job id (the left join off the
+        one-row aggregate keeps it when no spreadsheet matches)."""
+        wanted = self.spark.createDataFrame(
+            sorted({(j.google_spreadsheet_id, j.sheet_name) for j in jobs}),
+            "google_spreadsheet_id string, sheet_name string")
+        etl_jobs = self.etl_jobs.read()
+        rows = wanted.join(
+            self.spreadsheets.read().select(
+                F.col("id").alias("spreadsheet_id"), "google_spreadsheet_id",
+                "google_modified"),
+            "google_spreadsheet_id",
+        ).join(
+            etl_jobs.select("spreadsheet_id", "sheet_name",
+                            F.col("id").alias("job_id"), "raw_columns_rows_hash"),
+            ["spreadsheet_id", "sheet_name"], "left",
+        )
+        max_id = etl_jobs.agg(F.coalesce(F.max("id"), F.lit(0)).alias("max_id"))
+        found = max_id.join(rows, how="left").collect()  # ≤ len(jobs) rows
+        lookup = _PassLookup({}, max_id=int(found[0]["max_id"]))
+        for r in found:
+            if r["spreadsheet_id"] is None:
+                continue  # no spreadsheet matched: the max row alone
+            sid = int(r["spreadsheet_id"])
+            lookup.metas[r["google_spreadsheet_id"]] = (sid, r["google_modified"])
+            if r["job_id"] is not None:
+                lookup.jobs[(sid, r["sheet_name"])] = (
+                    int(r["job_id"]), r["raw_columns_rows_hash"])
+        return lookup
+
+    @contextmanager
+    def _accounting_pass(self, jobs: list[EtlJob]):
+        """Run loads of ``jobs`` against one driver-side lookup, then
+        apply every manifest they committed with one upsert — also when
+        a load raises."""
+        self._pass = self._lookup(jobs)
+        try:
+            yield
+        finally:
+            self._pass = None
+            self._apply_pending_commits()
 
     def target(self, table: str) -> TargetTable:
         return TargetTable(self.spark, self.table_path(table))
@@ -472,6 +556,13 @@ class SheetsEtlEngine:
         first so the change filter never re-selects a job whose load
         committed but whose accounting apply was interrupted (U6).
 
+        One accounting round trip per pass: the selected jobs share one
+        driver-side lookup, each ``load_sheet`` commits by renaming its
+        own manifest (still the per-sheet commit point), and the pass
+        applies all of them to ``etl_jobs`` with one upsert when it
+        ends, failures included. A pass that selects nothing reads and
+        writes no accounting.
+
         Per-job error isolation (``continue_on_error``, default on —
         a reference fix-by-design like O4): one sheet with a renamed
         header must not wedge every job ordered after it on every run.
@@ -481,13 +572,17 @@ class SheetsEtlEngine:
         self._apply_pending_commits()
         results: list[LoadResult] = []
         self.last_load_failures: list[tuple[EtlJob, Exception]] = []
-        for job in self.filter_extractable(jobs):
-            try:
-                results.append(self.load_sheet(job))
-            except Exception as exc:  # noqa: BLE001 — isolate per sheet
-                if not continue_on_error:
-                    raise
-                self.last_load_failures.append((job, exc))
+        selected = self.filter_extractable(jobs)
+        if not selected:
+            return results
+        with self._accounting_pass(selected):
+            for job in selected:
+                try:
+                    results.append(self.load_sheet(job))
+                except Exception as exc:  # noqa: BLE001 — isolate per sheet
+                    if not continue_on_error:
+                        raise
+                    self.last_load_failures.append((job, exc))
         return results
 
     # -- O3: per-sheet ETL -------------------------------------------------
@@ -502,22 +597,30 @@ class SheetsEtlEngine:
         target → project → hash short-circuit → overwrite partition →
         commit accounting last.
 
-        Replays pending commit manifests first — this public entry can
-        be called directly (not only via ``load_updated_spreadsheets``),
-        and a crash in a previous run's rename→apply window would
+        Inside ``load_updated_spreadsheets`` the accounting comes from
+        the pass's lookup and the commit is this sheet's manifest
+        rename; the pass applies it to ``etl_jobs`` when it ends. Called
+        directly, the load is a pass of its own: ``etl_jobs`` is applied
+        when it returns. A direct call replays pending commit manifests
+        first — a crash in a previous run's rename→apply window would
         otherwise leave its committed etl_job_id unknown to the
         accounting max, letting a NEW sheet claim the same id (and,
         sharing a target table, dynamically overwrite the committed
         partition). Replay is idempotent and free when no manifests
         are pending."""
-        self._apply_pending_commits()
+        if self._pass is None:
+            self._apply_pending_commits()
+            with self._accounting_pass([job]):
+                return self._load_sheet(job)
+        return self._load_sheet(job)
+
+    def _load_sheet(self, job: EtlJob) -> LoadResult:
+        lookup = self._pass
         raw_rows, content_hash = self.source.get_sheet(
             job.google_spreadsheet_id, job.sheet_name)
 
-        sheet = rows_ops.trim_cells(self._sheet_df(raw_rows))
-
         # T2 with the reference's contextual error wrapper (Tasks.php:116-123)
-        header = rows_ops.header_row(sheet, job.header_row)
+        header = _raw_header(raw_rows, job.header_row)
         out_names = list(job.column_mapping.keys())
         try:
             selectors = rows_ops.resolve_column_selectors(
@@ -527,34 +630,25 @@ class SheetsEtlEngine:
                 f"{e} in spreadsheet https://docs.google.com/spreadsheets/d/"
                 f"{job.google_spreadsheet_id} sheet {job.sheet_name}") from e
 
-        # accounting lookups (J1)
-        sheets_meta = self.spreadsheets.read()
-        meta = sheets_meta.filter(
-            F.col("google_spreadsheet_id") == job.google_spreadsheet_id).first()
+        # accounting lookups (J1), from the pass's driver-side lookup
+        meta = lookup.metas.get(job.google_spreadsheet_id)
         if meta is None:
             raise KeyError(
                 f"Spreadsheet not in accounting (run discovery first): "
                 f"{job.google_spreadsheet_id}")
-        jobs_meta = self.etl_jobs.read()
-        existing = jobs_meta.filter(
-            (F.col("spreadsheet_id") == int(meta["id"]))
-            & (F.col("sheet_name") == job.sheet_name)).first()
+        spreadsheet_id, google_modified = meta
+        existing = lookup.jobs.get((spreadsheet_id, job.sheet_name))
 
         # U3: hash short-circuit — advance accounting only, skip the load
-        if existing is not None and existing["raw_columns_rows_hash"] == content_hash:
+        if existing is not None and existing[1] == content_hash:
             self._commit_job(
-                int(existing["id"]), int(meta["id"]), job,
-                meta["google_modified"], content_hash)
-            return LoadResult(job, True, 0, int(existing["id"]))
+                existing[0], spreadsheet_id, job, google_modified, content_hash)
+            return LoadResult(job, True, 0, existing[0])
 
-        if existing is None:
-            max_id = jobs_meta.select(
-                F.coalesce(F.max("id"), F.lit(0)).alias("m")).first()["m"]
-            etl_job_id = int(max_id) + 1
-        else:
-            etl_job_id = int(existing["id"])
+        etl_job_id = lookup.max_id + 1 if existing is None else existing[0]
 
         # T3/T4/T5/T6 + VARCHAR(100) parity → partitioned write (U4/U5)
+        sheet = rows_ops.trim_cells(self._sheet_df(raw_rows))
         names = normalized_column_names(out_names)
         data = rows_ops.project_rows(sheet, selectors, names, job.skip_rows)
         data = rows_ops.enforce_cell_width(data, 100)
@@ -578,10 +672,10 @@ class SheetsEtlEngine:
             self.target(job.target_table).delete_job_partition(etl_job_id)
 
         # U2/U6: the commit manifest lands LAST — its atomic rename is
-        # the transaction's commit point; the accounting apply it
-        # triggers is replayable from the manifest after any crash
+        # the transaction's commit point; the pass-end accounting apply
+        # is replayable from the manifest after any crash
         self._commit_job(
-            etl_job_id, int(meta["id"]), job, meta["google_modified"], content_hash)
+            etl_job_id, spreadsheet_id, job, google_modified, content_hash)
         return LoadResult(job, False, rows_loaded, etl_job_id)
 
     # -- O4: access-revocation probe --------------------------------------

@@ -190,12 +190,11 @@ class StateTable:
             return df.select(*cols)
 
         kept = current.join(F.broadcast(updates.select(*keys)), on=keys, how="left_anti")
-        merged = conform(kept).unionByName(conform(updates))
-        # Materialize BEFORE the commit flips the pointer: `merged` reads
-        # the current snapshot lazily, and _gc could otherwise delete the
-        # files under it. localCheckpoint cuts the lineage to the old dir.
-        merged = merged.localCheckpoint(eager=True)
-        self._commit(merged)
+        # The merge reads the current snapshot lazily, with nothing
+        # materialized first: the write finishes before the pointer
+        # flips, and _gc keeps the _KEEP_VERSIONS newest snapshots, so
+        # the snapshot being read survives its own commit.
+        self._commit(conform(kept).unionByName(conform(updates)))
 
     def overwrite(self, df: DataFrame) -> None:
-        self._commit(df.localCheckpoint(eager=True))
+        self._commit(df)

@@ -467,6 +467,191 @@ def test_crash_before_manifest_leaves_fully_old_then_retries(
     assert tgt.count() == 3  # partition rewritten, not appended
 
 
+def _four_sheet_source():
+    """SHEET_A's spreadsheet plus three one-tab spreadsheets, each its
+    own job on its own target table."""
+    src = FixtureSheetSource()
+    src.put_sheet(SpreadsheetMeta("SSA" + "a" * 41, "2026-01-02T00:00:00.000Z",
+                                  "Sheet A"), "Tab1", SHEET_A)
+    jobs = [EtlJob("SSA" + "a" * 41, "Tab1", "table_a",
+                   {"name": "Name", "amount": "Amount Due"})]
+    for i, c in enumerate("CDE"):
+        gid = "SS" + c + c.lower() * 41
+        src.put_sheet(SpreadsheetMeta(gid, f"2026-01-0{3 + i}T00:00:00.000Z", c),
+                      "T", [["Id", "Val"], [str(i), c], [str(i + 10), c]])
+        jobs.append(EtlJob(gid, "T", f"table_{c.lower()}", {"id": "Id", "val": "Val"}))
+    return src, jobs
+
+
+def _job_ids(eng):
+    sheets = {r["id"]: r["google_spreadsheet_id"] for r in eng.spreadsheets.read().collect()}
+    return {(sheets[r["spreadsheet_id"]], r["sheet_name"]): r["id"]
+            for r in eng.etl_jobs.read().collect()}
+
+
+def test_crash_in_pass_end_apply_replays_every_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """U6 crash injection for the batched apply: one pass commits three
+    sheets (one reloaded, two new) by manifest rename, then dies in the
+    pass-end etl_jobs upsert. A fresh engine replays every manifest:
+    ids distinct and in load order, nothing re-selected, every target
+    partition present. A direct load_sheet of a fourth, new sheet made
+    while those manifests are pending must not claim one of their ids."""
+    import os
+    import shutil
+
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.plans.target_table import PARTITION_COL
+
+    source, jobs = _four_sheet_source()
+    wh = str(tmp_path / "wh")
+    eng = SheetsEtlEngine(spark, wh, source)
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=100)
+    assert [r.etl_job_id for r in eng.load_updated_spreadsheets(jobs[:1])] == [1]
+
+    changed = [row[:] for row in SHEET_A]
+    changed[1][1] = "55"
+    source.put_sheet(SpreadsheetMeta("SSA" + "a" * 41, "2026-01-09T00:00:00.000Z",
+                                     "Sheet A"), "Tab1", changed)
+    eng.find_updated_spreadsheets(now=200)
+
+    def crash(self, updates, keys):
+        raise RuntimeError("injected crash in pass-end apply")
+
+    monkeypatch.setattr(StateTable, "upsert", crash)
+    with pytest.raises(RuntimeError, match="pass-end apply"):
+        eng.load_updated_spreadsheets(jobs[:3])  # A reloads; C, D are new
+    monkeypatch.undo()
+    assert sorted(os.listdir(os.path.join(wh, "_commits"))) == [
+        "commit_1.json", "commit_2.json", "commit_3.json"]
+    key = [(j.google_spreadsheet_id, j.sheet_name) for j in jobs]
+    assert _job_ids(SheetsEtlEngine(spark, wh, source)) == {key[0]: 1}  # torn
+
+    # the same torn warehouse, twice: a direct load_sheet of the fourth
+    # sheet (E) replays first, so it takes the next id after the manifests
+    wh2 = str(tmp_path / "wh2")
+    shutil.copytree(wh, wh2)
+    direct = SheetsEtlEngine(spark, wh2, source)
+    res = direct.load_sheet(jobs[3])
+    assert (res.skipped_unchanged, res.etl_job_id) == (False, 4)
+    assert _job_ids(direct) == {key[0]: 1, key[1]: 2, key[2]: 3, key[3]: 4}
+    assert not os.listdir(os.path.join(wh2, "_commits"))
+
+    healed = SheetsEtlEngine(spark, wh, source)
+    healed.set_up_accounting()
+    assert _job_ids(healed) == {key[0]: 1, key[1]: 2, key[2]: 3}
+    assert not os.listdir(os.path.join(wh, "_commits"))
+    assert healed.filter_extractable(jobs[:3]) == []
+    assert healed.load_updated_spreadsheets(jobs[:3]) == []
+    for job, jid in zip(jobs[:3], (1, 2, 3)):
+        got = healed.target(job.target_table).read()
+        assert {r[PARTITION_COL] for r in got.collect()} == {jid}
+    tgt = healed.target("table_a").read()
+    assert tgt.filter("name = 'alice'").first()["amount"] == "55"
+
+
+def test_one_etl_jobs_upsert_per_pass(spark, tmp_path, monkeypatch):
+    """A pass over N changed sheets applies accounting with exactly one
+    etl_jobs upsert (N = 3 cold, N = 1 after one edit); a pass that
+    selects nothing runs no lookup and no upsert."""
+    from google_sheets_etl_spark.plans.state_table import StateTable
+
+    source, jobs = _four_sheet_source()
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh"), source)
+    eng.set_up_accounting()
+    calls = {"upsert": 0, "lookup": 0}
+    real_upsert, real_lookup = StateTable.upsert, SheetsEtlEngine._lookup
+
+    def counting_upsert(self, *a, **k):
+        if self.path == eng.etl_jobs.path:
+            calls["upsert"] += 1
+        return real_upsert(self, *a, **k)
+
+    def counting_lookup(self, *a, **k):
+        calls["lookup"] += 1
+        return real_lookup(self, *a, **k)
+
+    monkeypatch.setattr(StateTable, "upsert", counting_upsert)
+    monkeypatch.setattr(SheetsEtlEngine, "_lookup", counting_lookup)
+
+    def one_pass(now):
+        calls.update(upsert=0, lookup=0)
+        eng.find_updated_spreadsheets(now=now)
+        return eng.load_updated_spreadsheets(jobs[1:])
+
+    cold = one_pass(100)
+    assert [(r.skipped_unchanged, r.etl_job_id) for r in cold] == [
+        (False, 1), (False, 2), (False, 3)]
+    assert calls == {"upsert": 1, "lookup": 1}
+
+    gid = jobs[2].google_spreadsheet_id
+    source.put_sheet(SpreadsheetMeta(gid, "2026-02-01T00:00:00.000Z", "D"),
+                     "T", [["Id", "Val"], ["7", "d"]])
+    one = one_pass(200)
+    assert [(r.skipped_unchanged, r.etl_job_id, r.rows_loaded) for r in one] == [
+        (False, 2, 1)]
+    assert calls == {"upsert": 1, "lookup": 1}
+
+    assert one_pass(300) == []
+    assert calls == {"upsert": 0, "lookup": 0}
+
+
+@pytest.mark.parametrize("header_row", [0, 1, 2, 3, -1, 4])
+def test_driver_side_header_matches_spark_trim(spark, tmp_path, header_row):
+    """The header load_sheet resolves from the rows it already holds is
+    the one the Spark kernel reads: trim strips ASCII space only (tab,
+    newline and NBSP stay), None cells stay None, and a header row past
+    either end raises the kernel's error."""
+    from google_sheets_etl_spark.etl import _raw_header
+    from google_sheets_etl_spark.operators import rows as rows_ops
+
+    raw = [
+        ["  Name ", "\tAmount\t", " Café\n", " Id ", None, ""],
+        [None, "  ", " \t x \t ", "\n\n", "  y  ", 7],
+        [],
+        ["a"],
+    ]
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh"), FixtureSheetSource())
+    sheet = rows_ops.trim_cells(eng._sheet_df(raw))
+    if 0 <= header_row < len(raw):
+        assert _raw_header(raw, header_row) == rows_ops.header_row(sheet, header_row)
+        return
+    for read in (lambda: _raw_header(raw, header_row),
+                 lambda: rows_ops.header_row(sheet, header_row)):
+        with pytest.raises(rows_ops.RequiredColumnNotFound,
+                           match=f"^Header row not found: {header_row}$"):
+            read()
+
+
+def test_state_table_upserts_past_gc_window_keep_contents(spark, tmp_path):
+    """More than _KEEP_VERSIONS successive upserts, each built from the
+    table's current snapshot (read lazily while the next one is written
+    and older ones are garbage-collected), keep exactly the expected
+    rows."""
+    from pyspark.sql import functions as F
+
+    from google_sheets_etl_spark.plans.state_table import _KEEP_VERSIONS, StateTable
+
+    schema = "k long, v long"
+    table = StateTable(spark, str(tmp_path / "st"), spark.createDataFrame([], schema).schema)
+    table.create_if_not_exists()
+    want: dict[int, int] = {}
+    for step in range(_KEEP_VERSIONS + 3):
+        current = table.read()
+        updates = current.filter(F.col("k") % 2 == step % 2).select(
+            "k", (F.col("v") + 10).alias("v")
+        ).unionByName(spark.createDataFrame([(step, step)], schema))
+        table.upsert(updates, keys=["k"])
+        want = {k: v + 10 if k % 2 == step % 2 else v for k, v in want.items()}
+        want[step] = step
+        assert {r["k"]: r["v"] for r in table.read().collect()} == want
+    table.overwrite(table.read().filter(F.col("k") > 1))
+    assert {r["k"]: r["v"] for r in table.read().collect()} == {
+        k: v for k, v in want.items() if k > 1}
+
+
 def test_probe_refresh_never_advances_discovery_watermark(
     spark, tmp_path, source, jobs,
 ):
